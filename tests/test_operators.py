@@ -99,17 +99,6 @@ def test_wic_rules_and_score(spark):
     assert scores["w4"] == 100.0 and scores["w2"] == 25.0
 
 
-def test_minhash_blocking(spark):
-    rows = [
-        (1, "uniswap labs protocol"),
-        (2, "uniswap labs protocol inc"),
-        (3, "completely different words here"),
-    ]
-    df = spark.createDataFrame(rows, "id long, name string")
-    pairs = {(r["src"], r["dst"]) for r in linking.minhash_blocking(df, "id", "name").collect()}
-    assert (1, 2) in pairs and (1, 3) not in pairs
-
-
 def test_salted_agg_matches_plain(spark):
     """Salted two-phase aggregation is semantics-neutral, including on a
     heavily skewed key (one hub key holding 80% of rows)."""

@@ -4,12 +4,22 @@ Each test runs the operator (so AQE finalizes its plan) and then asserts
 the load-bearing physical property: the property that makes the plan the
 right one at 100 TB. If a refactor silently downgrades a broadcast join to
 a sort-merge join, or loses the below-shuffle top-k, these fail before any
-benchmark would notice.
+benchmark would notice. The last tests hold the flagship's thread-pool
+fan-out and the feed base tables to their oracle and failure paths.
 """
 
+import shutil
+import signal
+import threading
+
+import duckdb
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+import web3_knowledge_graph_spark.driver_queries as dq
 from web3_knowledge_graph_spark.driver_queries import _pages, _vocab_dict
+from web3_knowledge_graph_spark.sources.feeds import all_feeds
 
 SF = "/root/testdata/sf0.001"
 
@@ -300,35 +310,39 @@ def test_refine_partition_broadcasts_dimensions(spark):
 
 
 def test_feed_rel_cache_bounded_and_clearable(spark):
-    """The memoized feed relation must be BOUNDED (evict + unpersist the
-    oldest entry past _FEED_REL_CACHE_MAX) and explicitly invalidatable
+    """The relation memo must be BOUNDED (evict + unpersist the
+    oldest entry of a kind past _MEMO_MAX) and explicitly invalidatable
     via clear_feed_cache() — a long-lived session sweeping many sf_dirs
     must not accumulate executor-storage blocks (round-3 advice)."""
-    import web3_knowledge_graph_spark.driver_queries as dq
-
     dq.clear_feed_cache()
-    # Pre-fill to capacity with fakes (MAX-independent: works for any
-    # _FEED_REL_CACHE_MAX) so the real entry must evict the oldest.
+    # Pre-fill the "feed" kind to capacity with fakes (MAX-independent)
+    # so the real entry must evict the oldest; one entry of another kind
+    # rides along and must survive, since the bound is per kind.
+    other = spark.range(1).persist()
+    other.count()
+    dq._MEMO[("alias", "app", "x")] = other
     fakes = []
-    for i in range(dq._FEED_REL_CACHE_MAX):
+    for i in range(dq._MEMO_MAX):
         f = spark.range(i + 1).persist()
         f.count()
         fakes.append(f)
-        dq._FEED_REL_CACHE[("app", str(i))] = f
+        dq._MEMO[("feed", "app", str(i))] = f
 
     rel = dq._feed_rel(spark, SF)
-    assert len(dq._FEED_REL_CACHE) <= dq._FEED_REL_CACHE_MAX
+    assert sum(k[0] == "feed" for k in dq._MEMO) <= dq._MEMO_MAX
     # the oldest fake was evicted AND its blocks released
-    assert ("app", "0") not in dq._FEED_REL_CACHE
+    assert ("feed", "app", "0") not in dq._MEMO
     assert not fakes[0].storageLevel.useMemory
+    assert ("feed", "app", "1") in dq._MEMO
+    assert dq._MEMO[("alias", "app", "x")] is other
     # same key memoizes (no re-materialization)
     assert dq._feed_rel(spark, SF) is rel
 
     dq.clear_feed_cache()
-    assert not dq._FEED_REL_CACHE
+    assert not dq._MEMO
     assert not rel.storageLevel.useMemory
-    for f in fakes[1:]:
-        f.unpersist()
+    for f in (other, *fakes[1:]):
+        assert not f.storageLevel.useMemory
 
 
 def test_feed_rel_cached_partitioning_sane(spark):
@@ -395,3 +409,64 @@ def test_unimax_sample_two_scan_broadcast_dim(spark):
     assert final.count("Scan parquet") == 1
     assert "BroadcastHashJoin" in final
     assert "SortMergeJoin" not in final
+
+
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+
+
+def _canon(pdf) -> list:
+    cols = sorted(pdf.columns)
+    return sorted(tuple(repr(v) for v in row) for row in pdf[cols].itertuples(index=False))
+
+
+def test_flagship_triples_equals_oracle(spark):
+    """The whole flagship (threaded extraction, memoized feeds, graph
+    build, checkpoints) equals its natural-key DuckDB replay, rows
+    compared order-insensitively."""
+    got = dq.flagship_triples(spark, SF).toPandas()
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    want = con.execute(dq.all_oracles()["flagship_triples"]).fetchdf()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) == len(want) == 12787
+    assert _canon(got) == _canon(want)
+
+
+def test_flagship_triples_failure_joins_workers(spark, monkeypatch):
+    """A failing stage job re-raises on the caller, and no worker thread
+    outlives the call. SIGALRM turns a hang into a test failure."""
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("alias relations failed")
+
+    def hung(signum, frame):
+        raise TimeoutError("flagship_triples did not return after a worker failed")
+
+    monkeypatch.setattr(dq, "_page_alias_relations", boom)
+    before = set(threading.enumerate())
+    prev = signal.signal(signal.SIGALRM, hung)
+    signal.alarm(600)
+    try:
+        with pytest.raises(RuntimeError, match="alias relations failed"):
+            dq.flagship_triples(spark, SF)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)
+    alive = [t for t in threading.enumerate() if t not in before and not t.daemon]
+    assert not alive, alive
+
+
+def test_all_feeds_failure_unpersists_bases(spark, tmp_path):
+    """An sf_dir without orders.parquet fails all_feeds; the base tables
+    that did persist (events, customer) must be released, not left in the
+    block manager for a retried call to stack fresh copies on top."""
+    for t in ("events", "customer"):
+        shutil.copy(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(AnalysisException):
+        all_feeds(spark, str(tmp_path))
+    assert jsc.getPersistentRDDs().size() == before

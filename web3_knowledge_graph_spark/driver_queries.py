@@ -19,6 +19,7 @@ columns by name):
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,6 +42,7 @@ from .operators import linkpred as LP
 from .operators import triangles as TR
 from .operators.projection import bipartite_project
 from .operators.rules import apply_rules, reputation_scores
+from .plans.pipeline import AUTHOR_RE
 from .sources.pages import PAGES_SQL, synthesize_pages
 
 PAGES_WITH = f"WITH pages AS ({PAGES_SQL})"
@@ -60,8 +62,6 @@ VOCAB_ENTITIES = [
 _DICT_VALUES = ", ".join(
     f"('{a}', '{eid}', '{kind}')" for eid, kind, als in VOCAB_ENTITIES for a in als
 )
-
-AUTHOR_RE = r"Author wallet: (0x[a-fA-F0-9]+)"
 
 # Frozen token/shingle SQL fragments (DuckDB side) mirroring datasets.dedup
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)"
@@ -94,6 +94,66 @@ def _vocab_dict(spark: SparkSession) -> DataFrame:
         [(eid, kind, als) for eid, kind, als in VOCAB_ENTITIES],
         "entity_id string, kind string, aliases array<string>",
     )
+
+
+# The one relation memo, keyed by (kind, application, sf_dir). Each kind
+# derives deterministically from the READ-ONLY sf_dir tables, so every
+# consumer in a session shares one computation instead of re-paying it:
+#   "feed"       the 22-feed edge relation (_feed_rel; ~4-12 s per
+#                evaluation at sf0.1), read by graph_wic, the flagship
+#                and the reputation rollup
+#   "alias"      the page alias-relation base (_page_alias_relations)
+#   "wic_base"   the graph-WIC base label tree (_wic_base)
+#   "graph_wic"  the composed graph-WIC label relation (q_graph_wic)
+# BOUNDED at _MEMO_MAX entries per kind: four covers a session sweeping all
+# four sf tiers (0.001/0.01/0.1/1) without thrashing, and every entry is
+# dimension- or label-relation-sized. Eviction drops the OLDEST INSERTION
+# of the kind (not LRU: a hit does not refresh an entry) and unpersists
+# it; clear_feed_cache() unpersists and drops every entry. unpersist() is
+# a no-op on the lazily localCheckpoint'ed WIC entries, whose blocks free
+# with their last reference.
+_MEMO: dict = {}
+_MEMO_MAX = 4
+
+
+def _unpersist(*dfs) -> None:
+    for df in dfs:
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # entry from an already-stopped SparkSession
+
+
+def _memo(kind, spark, sf_dir, build, persist=False, on_handle=None):
+    """``build()`` memoized under (kind, application, sf_dir).
+
+    ``persist=True`` persists the relation (public-API unpersistable,
+    unlike localCheckpoint) and materializes it eagerly; ``on_handle``
+    gets the persisted, not yet materialized handle right before that
+    count. A failed count unpersists the partial blocks before
+    re-raising, so a retried call does not stack fresh copies on top."""
+    key = (kind, spark.sparkContext.applicationId, sf_dir)
+    if key not in _MEMO:
+        while sum(k[0] == kind for k in _MEMO) >= _MEMO_MAX:
+            _unpersist(_MEMO.pop(next(k for k in _MEMO if k[0] == kind)))
+        df = build()
+        if persist:
+            df = df.persist()
+            try:
+                if on_handle is not None:
+                    on_handle(df)
+                df.count()
+            except BaseException:
+                _unpersist(df)
+                raise
+        _MEMO[key] = df
+    return _MEMO[key]
+
+
+def clear_feed_cache() -> None:
+    """Unpersist and drop every memoized relation."""
+    _unpersist(*_MEMO.values())
+    _MEMO.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -342,15 +402,6 @@ HAVING MAX(ts) < TIMESTAMP '2024-01-31 06:00:00' - INTERVAL 12 HOUR
 # Joins / linking (SURVEY §2.5) and aggregation rules (§2.6)
 # ---------------------------------------------------------------------------
 
-# Memoized alias-relation base per (application, sf_dir), same LRU shape
-# as _FEED_REL_CACHE: the three q_* construction-time callers previously
-# each ran an unconditional localCheckpoint whose RDD blocks were never
-# unpersisted — repeated query calls in one session accumulated
-# block-manager storage (round-4 advice). persist() is evictable;
-# clear_feed_cache() also drains this cache.
-_ALIAS_BASE_CACHE: dict = {}
-
-
 def _page_alias_relations(spark, sf_dir, pages=None):
     wallet = F.lower(F.regexp_extract("text", AUTHOR_RE, 1))
 
@@ -371,18 +422,10 @@ def _page_alias_relations(spark, sf_dir, pages=None):
         # relation; its lifecycle is managed by the caller
         base = build(pages).localCheckpoint()
     else:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if key not in _ALIAS_BASE_CACHE:
-            while len(_ALIAS_BASE_CACHE) >= _FEED_REL_CACHE_MAX:
-                old = next(iter(_ALIAS_BASE_CACHE))
-                try:
-                    _ALIAS_BASE_CACHE.pop(old).unpersist()
-                except Exception:
-                    pass
-            cached = build(_pages(spark, sf_dir)).persist()
-            cached.count()  # eager, like the checkpoint it replaces
-            _ALIAS_BASE_CACHE[key] = cached
-        base = _ALIAS_BASE_CACHE[key]
+        # the three q_* callers share one memoized, evictable base
+        base = _memo(
+            "alias", spark, sf_dir, lambda: build(_pages(spark, sf_dir)), persist=True
+        )
     reg = base.select("wallet", F.explode("ens_l").alias("ens")).distinct()
     th = (
         base.select(F.explode("handle_l").alias("handle"), F.col("ens_l"))
@@ -1570,90 +1613,30 @@ _FEED_RULE_QUERIES = (
 )
 
 
-# The materialized feed-rule edge relation, memoized per (application,
-# sf_dir): the feeds derive deterministically from the READ-ONLY base
-# tables, so every consumer (graph_wic, the flagship, the reputation
-# rollup) shares ONE materialization instead of each re-running the
-# 22-feed union DAG (~4-12 s per evaluation at sf0.1). BOUNDED: persist()
-# (public-API unpersistable, unlike localCheckpoint) with LRU eviction at
-# _FEED_REL_CACHE_MAX entries, so a long-lived session sweeping many
-# sf_dirs can't accumulate executor-storage blocks indefinitely
-# (round-3 advice). clear_feed_cache() is the explicit invalidation hook.
-_FEED_REL_CACHE: dict = {}
-# covers a driver sweeping all four sf tiers (0.001/0.01/0.1/1) without
-# thrashing; each entry is a dimension-sized relation, so four at once is
-# still bounded (round-4 verdict watch item on the hard-coded 2)
-_FEED_REL_CACHE_MAX = 4
-
-
-# the composed graph-WIC label relation (base tree + post-passes): the
-# rollup (wic_reputation_full) consumes the same relation graph_wic
-# returns, and the expensive subtree inside it is the LAZY
-# localCheckpoint of the ~45-rule base — sharing the DataFrame object
-# shares that checkpoint, so the tree materializes once per
-# (application, sf_dir) instead of once per consumer. No eager job at
-# construction (the lazy checkpoint materializes on the first action);
-# entries are label-relation-sized. Same LRU bound as the feed cache.
-_GRAPH_WIC_CACHE: dict = {}
-_WIC_BASE_CACHE: dict = {}
-
-
-def clear_feed_cache() -> None:
-    """Unpersist and drop every memoized relation (feed + alias base +
-    graph-WIC labels)."""
-    for cache in (_FEED_REL_CACHE, _ALIAS_BASE_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # entry from an already-stopped SparkSession
-        cache.clear()
-    _GRAPH_WIC_CACHE.clear()  # lazy-checkpoint blocks free with the refs
-    _WIC_BASE_CACHE.clear()
-
-
 def _feed_rel(spark, sf_dir, on_handle=None):
     """The memoized feed-edge relation. ``on_handle`` (optional) is
     called with the PERSISTED-BUT-NOT-YET-MATERIALIZED handle right
-    before the eager count: the flagship uses it to start constructing
-    build_graph's plans (pure driver-side work plus one profiles
-    checkpoint) concurrently with the feed materialization — plan
-    construction needs only the DataFrame handle, not its data, and
-    this overlap removes ~4 s from the cold first trial's critical
-    path (round-5 perf item)."""
-    from .operators import edge_rules as _ER
+    before the eager count (a memo hit has no count and no call): the
+    flagship uses it to start constructing build_graph's plans (pure
+    driver-side work plus one profiles checkpoint) concurrently with the
+    feed materialization — plan construction needs only the DataFrame
+    handle, not its data, and this overlap removes ~4 s from the cold
+    first trial's critical path (round-5 perf item)."""
     from .sources.feeds import all_feeds
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FEED_REL_CACHE:
-        while len(_FEED_REL_CACHE) >= _FEED_REL_CACHE_MAX:
-            old = next(iter(_FEED_REL_CACHE))  # oldest insertion first
-            try:
-                _FEED_REL_CACHE.pop(old).unpersist()
-            except Exception:
-                pass
-        feeds, bases = all_feeds(spark, sf_dir)
-        rel = _ER.feed_edge_rules(feeds).persist()
-        try:
-            if on_handle is not None:
-                on_handle(rel)
-            rel.count()  # eager, like the localCheckpoint it replaces
-        except BaseException:
-            # a failed materialization must not leak the persisted rel
-            # or the three base-table blocks into the block manager —
-            # a retried query call would re-persist fresh copies on top
-            for df in (rel, *bases):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-            raise
-        for b in bases:  # rel now holds the data; free the base blocks
-            b.unpersist()
-        _FEED_REL_CACHE[key] = rel
-    elif on_handle is not None:
-        on_handle(_FEED_REL_CACHE[key])
-    return _FEED_REL_CACHE[key]
+    bases: list = []
+
+    def build():
+        feeds, persisted = all_feeds(spark, sf_dir)
+        bases.extend(persisted)
+        return ER.feed_edge_rules(feeds)
+
+    try:
+        return _memo("feed", spark, sf_dir, build, persist=True, on_handle=on_handle)
+    finally:
+        # the materialized relation holds the data now (or its count
+        # failed): either way the three base-table blocks go
+        _unpersist(*bases)
 
 
 def _feed_edges_union_sql() -> str:
@@ -2379,23 +2362,19 @@ def _graph_wic_driver_tree() -> list:
     ]
 
 
-def _wic_base(spark, sf_dir, trip=None):
+def _wic_base(spark, sf_dir, trip):
     """The graph-WIC BASE label relation (the ~35-rule driver tree over
-    the memoized feed triples), lazily localCheckpointed and memoized per
-    (application, sf_dir) so q_graph_wic and q_cosigner_buddies share ONE
-    computation of the expensive tree instead of each paying it (~44 s at
-    sf0.01 before sharing). Evicted alongside the other relation memos."""
+    the memoized feed triples ``trip``), lazily localCheckpointed and
+    memoized per (application, sf_dir) so q_graph_wic and
+    q_cosigner_buddies share ONE computation of the expensive tree
+    instead of each paying it (~44 s at sf0.01 before sharing)."""
     from .operators.wic import graph_wic_labels
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIC_BASE_CACHE:
-        if trip is None:
-            trip = ER.as_named_triples(_feed_rel(spark, sf_dir))
+    def build():
         base = graph_wic_labels(trip, tree=_graph_wic_driver_tree())
-        while len(_WIC_BASE_CACHE) >= _FEED_REL_CACHE_MAX:
-            _WIC_BASE_CACHE.pop(next(iter(_WIC_BASE_CACHE)))
-        _WIC_BASE_CACHE[key] = base.localCheckpoint(eager=False)
-    return _WIC_BASE_CACHE[key]
+        return base.localCheckpoint(eager=False)
+
+    return _memo("wic_base", spark, sf_dir, build)
 
 
 def q_graph_wic(spark, sf_dir):
@@ -2413,7 +2392,15 @@ def q_graph_wic(spark, sf_dir):
     DaoTreasuryFunder from entity-linked transfer flows plus the
     propHouse Winner-proposal author arm) and the developers
     SmartContractDev arm (developers/cyphers.py:55-70: the repo
-    description keyword gate as a feed-computed seed dimension)."""
+    description keyword gate as a feed-computed seed dimension).
+
+    Memoized: the rollup (wic_reputation_full) consumes the same relation,
+    so both share the lazy base checkpoint inside it. No eager job at
+    construction; the checkpoint materializes on the first action."""
+    return _memo("graph_wic", spark, sf_dir, lambda: _graph_wic(spark, sf_dir))
+
+
+def _graph_wic(spark, sf_dir):
     from .operators.wic import (
         SC_DEV_DESC_KEYWORDS,
         context_flow_labels,
@@ -2422,9 +2409,6 @@ def q_graph_wic(spark, sf_dir):
     )
     from .sources.feeds import feed
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _GRAPH_WIC_CACHE:
-        return _GRAPH_WIC_CACHE[key]
     _prep(spark)
     # every tree rule references the triple relation (some twice): the
     # memoized feed checkpoint (_feed_rel) cuts the lineage once and is
@@ -2466,15 +2450,11 @@ def q_graph_wic(spark, sf_dir):
     # the post-passes read the BASE label relation (one synchronous
     # step — see the operator docstrings for why that is the
     # deterministic restatement of the reference's live-graph recursion)
-    out = (
+    return (
         base.unionByName(cosigner_expansion(base, trip))
         .unionByName(context_flow_labels(base, trip, winners=winners))
         .unionByName(smart_contract_dev_labels(trip, sc_repos))
     )
-    while len(_GRAPH_WIC_CACHE) >= _FEED_REL_CACHE_MAX:
-        _GRAPH_WIC_CACHE.pop(next(iter(_GRAPH_WIC_CACHE)))
-    _GRAPH_WIC_CACHE[key] = out
-    return out
 
 
 def _graph_wic_with() -> str:
@@ -4612,145 +4592,91 @@ def flagship_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.pipeline import build_graph, extract_stage, triples
     from .schemas import ALIAS_DICT
 
-    # the feed-rule edge families are a DAG independent of the corpus
-    # extraction — evaluate them on a separate thread so the Spark
-    # scheduler overlaps their ~17 small stages with the extraction jobs
-    # (their wall time disappears instead of adding ~4 s serially)
-    import threading
+    # Every independent job DAG below runs on this pool so the Spark
+    # scheduler interleaves their stages; Future.result() re-raises a
+    # worker's exception here, and leaving the block joins the workers.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        # the feed-rule edge families are a DAG independent of the corpus
+        # extraction: their ~17 small stages overlap the extraction jobs
+        # (~4 s serially). Memoized: the first flagship/graph-WIC call in
+        # a session pays the 22-feed DAG once. The persisted handle is
+        # published BEFORE the materializing count, so build_graph's plan
+        # construction below overlaps the feed execution.
+        feed_handle = Future()
+        feed = pool.submit(_feed_rel, spark, sf_dir, feed_handle.set_result)
 
-    feed_out: dict = {}
-    feed_handle_ready = threading.Event()
+        # materialize the synthesized corpus once: pages are built from
+        # documents via md5-concat expressions, and four extraction passes
+        # (regex mentions, dictionary, authors, alias relations) would each
+        # re-run that synthesis otherwise
+        pages = _pages(spark, sf_dir).localCheckpoint()
+        alias_dict = spark.createDataFrame(alias_dict_rows(), ALIAS_DICT)
+        # materialize mentions + the small derived relations once: every
+        # downstream edge/node family re-derives the regex-extraction DAG
+        # otherwise, and the fused mega-plan is also expensive to codegen.
+        # The two corpus passes (mention extraction; the alias-relation
+        # extract inside _page_alias_relations) depend ONLY on the
+        # checkpointed pages (serial they cost extract + alias wall;
+        # interleaved, max of the two). The alias job materializes its
+        # shared base once and then checkpoints the two small distinct
+        # projections off it.
+        def _alias_job():
+            reg0, th0 = _page_alias_relations(spark, sf_dir, pages=pages)
+            return reg0.localCheckpoint(), th0.localCheckpoint()
 
-    def _feed_job():
-        try:
-            # memoized: the first flagship/graph-WIC call in a session pays
-            # the 22-feed DAG once; later calls reuse the checkpoint. The
-            # on_handle callback publishes the persisted handle BEFORE the
-            # materializing count, so the main thread can overlap
-            # build_graph plan construction with the feed execution.
-            def _publish(rel):
-                feed_out["rel"] = rel
-                feed_handle_ready.set()
-
-            _feed_rel(spark, sf_dir, on_handle=_publish)
-        except BaseException as exc:  # re-raised on the main thread
-            feed_out["exc"] = exc
-        finally:
-            feed_handle_ready.set()  # unblock the main thread on error
-
-    feed_thread = threading.Thread(target=_feed_job, name="feed-edges")
-    feed_thread.start()
-
-    # materialize the synthesized corpus once: pages are built from
-    # documents via md5-concat expressions, and four extraction passes
-    # (regex mentions, dictionary, authors, alias relations) would each
-    # re-run that synthesis otherwise
-    pages = _pages(spark, sf_dir).localCheckpoint()
-    alias_dict = spark.createDataFrame(alias_dict_rows(), ALIAS_DICT)
-    # materialize mentions + the small derived relations once: every
-    # downstream edge/node family re-derives the regex-extraction DAG
-    # otherwise, and the fused mega-plan is also expensive to codegen.
-    # The two corpus passes (mention extraction; the alias-relation
-    # extract inside _page_alias_relations) both depend ONLY on the
-    # checkpointed pages — independent job DAGs, so run them on parallel
-    # threads and let the scheduler interleave their stages (serial they
-    # cost extract + alias wall; interleaved, max of the two). The alias
-    # thread materializes its shared base once and then checkpoints the
-    # two small distinct projections off it.
-    stage_out: dict = {}
-
-    def _thread(key, fn):
-        def _run():
-            try:
-                stage_out[key] = fn()
-            except BaseException as exc:
-                stage_out[f"{key}_exc"] = exc
-        t = threading.Thread(target=_run, name=f"stage-{key}")
-        t.start()
-        return t
-
-    def _alias_job():
-        reg0, th0 = _page_alias_relations(spark, sf_dir, pages=pages)
-        return reg0.localCheckpoint(), th0.localCheckpoint()
-
-    stage_threads = [
-        _thread("mentions", lambda: extract_stage(pages, alias_dict).localCheckpoint()),
-        _thread("alias", _alias_job),
-    ]
-    for t in stage_threads:
-        t.join()
-    for key in ("mentions_exc", "alias_exc"):
-        if key in stage_out:
-            raise stage_out[key]
-    mentions, (reg, th) = stage_out["mentions"], stage_out["alias"]
-    registrations = reg.select(
-        F.col("ens").alias("name"), F.col("wallet").alias("owner")
-    ).withColumns(
-        {
-            "resolved_address": F.col("owner"),
-            "registrant": F.col("owner"),
-            "transaction_id": F.lit(None).cast("string"),
-            "block_number": F.lit(None).cast("long"),
-        }
-    )
-    profiles = th.groupBy("handle").agg(
-        F.concat_ws(" ", F.collect_set(F.col("ens"))).alias("bio")
-    ).withColumns(
-        {
-            "name": F.col("handle"),
-            "verified": F.lit(None).cast("boolean"),
-            "user_id": F.lit(None).cast("string"),
-            "follower_count": F.lit(None).cast("long"),
-            "website": F.lit(None).cast("string"),
-            "language": F.lit(None).cast("string"),
-        }
-    )
-    balances = spark.createDataFrame(
-        [], "address string, contract_address string, snapshot int"
-    )
-    # widened vocabulary: all twelve per-source feeds contribute their edge
-    # families (operators/edge_rules.py); each feed is bounded by its own
-    # source table, never the corpus. Wait only for the persisted HANDLE —
-    # build_graph construction (driver-side plan building + the profiles
-    # checkpoint) is lazy over the feed relation, so it runs concurrently
-    # with the feed materialization still in flight on the feed thread.
-    feed_handle_ready.wait()
-    if "exc" in feed_out:
-        raise feed_out["exc"]
-    nodes, edges = build_graph(
-        spark, mentions, registrations, profiles, balances, alias_dict,
-        feed_edges_rel=feed_out["rel"],
-    )
-    # the node/edge checkpoints below scan the feed relation: join the
-    # materializing count first so the racing checkpoint jobs read persisted
-    # blocks instead of each recomputing the 19-family union
-    feed_thread.join()
-    if "exc" in feed_out:
-        raise feed_out["exc"]
-    # cut lineage before the two node-dimension joins in triples(): without
-    # this the whole union-of-branches DAG recomputes once per join side
-    # (run_pipeline gets the same effect by writing nodes/edges to parquet).
-    # The two materializations are independent jobs — run them on parallel
-    # threads so the scheduler interleaves their stages.
-    ckpt_out: dict = {}
-
-    def _ckpt(key, df):
-        def _run():
-            try:
-                ckpt_out[key] = df.localCheckpoint()
-            except BaseException as exc:
-                ckpt_out[f"{key}_exc"] = exc
-        t = threading.Thread(target=_run, name=f"ckpt-{key}")
-        t.start()
-        return t
-
-    ts = [_ckpt("nodes", nodes), _ckpt("edges", edges)]
-    for t in ts:
-        t.join()
-    for key in ("nodes_exc", "edges_exc"):
-        if key in ckpt_out:
-            raise ckpt_out[key]
-    return triples(ckpt_out["nodes"], ckpt_out["edges"])
+        mentions = pool.submit(
+            lambda: extract_stage(pages, alias_dict).localCheckpoint()
+        )
+        alias = pool.submit(_alias_job)
+        mentions, (reg, th) = mentions.result(), alias.result()
+        registrations = reg.select(
+            F.col("ens").alias("name"), F.col("wallet").alias("owner")
+        ).withColumns(
+            {
+                "resolved_address": F.col("owner"),
+                "registrant": F.col("owner"),
+                "transaction_id": F.lit(None).cast("string"),
+                "block_number": F.lit(None).cast("long"),
+            }
+        )
+        profiles = th.groupBy("handle").agg(
+            F.concat_ws(" ", F.collect_set(F.col("ens"))).alias("bio")
+        ).withColumns(
+            {
+                "name": F.col("handle"),
+                "verified": F.lit(None).cast("boolean"),
+                "user_id": F.lit(None).cast("string"),
+                "follower_count": F.lit(None).cast("long"),
+                "website": F.lit(None).cast("string"),
+                "language": F.lit(None).cast("string"),
+            }
+        )
+        balances = spark.createDataFrame(
+            [], "address string, contract_address string, snapshot int"
+        )
+        # widened vocabulary: all twelve per-source feeds contribute their
+        # edge families (operators/edge_rules.py); each feed is bounded by
+        # its own source table, never the corpus. Wait only for the
+        # persisted HANDLE (or for the whole call: a memo hit publishes
+        # none, a failure re-raises) — build_graph construction is lazy
+        # over the feed relation, so it runs while the count is in flight.
+        wait([feed_handle, feed], return_when=FIRST_COMPLETED)
+        feed_rel = feed_handle.result() if feed_handle.done() else feed.result()
+        nodes, edges = build_graph(
+            spark, mentions, registrations, profiles, balances, alias_dict,
+            feed_edges_rel=feed_rel,
+        )
+        # the node/edge checkpoints below scan the feed relation: join the
+        # materializing count first so the racing checkpoint jobs read
+        # persisted blocks instead of each recomputing the 19-family union
+        feed.result()
+        # cut lineage before the two node-dimension joins in triples():
+        # without this the whole union-of-branches DAG recomputes once per
+        # join side (run_pipeline gets the same effect by writing
+        # nodes/edges to parquet). The two materializations are
+        # independent jobs.
+        nodes, edges = (pool.submit(df.localCheckpoint) for df in (nodes, edges))
+        return triples(nodes.result(), edges.result())
 
 
 def _flagship_oracle() -> str:

@@ -248,21 +248,6 @@ def balances_pdf() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def tokens_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        [
-            {
-                "contract_address": D.token_contract(k),
-                "contract_type": ("erc20", "erc721", "erc1155")[k % 3],
-                "symbol": f"TK{k}$!",  # junk chars to clean (ingest.py:17-20)
-                "decimal": hex(18) if k % 2 == 0 else "18",
-                "twitter_username": D.twitter_handle(k + 50).upper(),
-            }
-            for k in range(D.N_TOKEN_ENTITIES)
-        ]
-    )
-
-
 def alias_dict_pdf() -> pd.DataFrame:
     return pd.DataFrame(D.alias_dict_rows())
 

@@ -12,9 +12,6 @@ from pyspark.sql import functions as F
 # (^0x[a-fA-F0-9]{40}$); duplicated at ingestion/helpers/utils.py:42-46.
 WALLET_RE = r"^0x[a-fA-F0-9]{40}$"
 
-# Twitter handle validity — postProcessing/twitter/process.py:27-35
-HANDLE_RE = r"^[A-Za-z0-9_]{1,15}$"
-
 
 def is_valid_wallet(c: Column) -> Column:
     return c.rlike(WALLET_RE)
@@ -23,10 +20,6 @@ def is_valid_wallet(c: Column) -> Column:
 def is_zero_address(c: Column) -> Column:
     """int(addr,16)==0 — helpers/utils.py:8-15, web3Utils.py:36-41."""
     return c.rlike(r"^0x0+$")
-
-
-def is_valid_handle(c: Column) -> Column:
-    return c.rlike(HANDLE_RE)
 
 
 def sanitize_text(c: Column) -> Column:
@@ -76,21 +69,10 @@ def hex_to_decimal(c: Column, precision: int = 38) -> Column:
     return folded
 
 
-def scale_by_decimals(amount: Column, decimals: Column) -> Column:
-    """balance / 10**decimal — ingestion/tokenHolders/ingest.py:96-101."""
-    return amount.cast("double") / F.pow(F.lit(10.0), decimals.cast("int"))
-
-
 def epoch_to_ts(c: Column) -> Column:
     """Epoch seconds → timestamp — apoc.date.toISO8601(toInteger(ts),'s')
     at helpers/queries.py:118, ingestion/mirror/cyphers.py:36."""
     return F.to_timestamp(F.from_unixtime(c.cast("long")))
-
-
-def url_host(c: Column) -> Column:
-    """url → domain — urlparse at postProcessing/twitterRelations/process.py:55-73
-    (without the network redirect-follow; resolve redirects from a fixture map)."""
-    return F.lower(F.parse_url(c, F.lit("HOST")))
 
 
 def split_camel_case(c: Column) -> Column:

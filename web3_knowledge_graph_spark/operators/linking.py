@@ -17,8 +17,8 @@ in order by /root/reference/pipelines/postProcessing/accounts/process.py:45-53:
 Spark restatement: each rule is a join/agg pipeline returning
 identity_edges(src_id, dst_id, rule, score, citation). Anti-join guards
 (WHERE NOT (a)-[:X]-(b)) become left_anti joins; the same-handle self-join is
-an equi-join on the blocking key with id1 < id2 dedup; candidate blocking for
-fuzzy name matches uses MinHash-LSH (pyspark.ml) over name token sets.
+an equi-join on the blocking key with id1 < id2 dedup. Fuzzy (near-duplicate)
+blocking is MinHash-LSH in datasets/dedup.
 """
 
 from __future__ import annotations
@@ -28,18 +28,6 @@ from pyspark.sql import functions as F
 
 REF_COUNT_THRESHOLD = 3  # accounts/cyphers.py:89 (count > 3)
 REF_PROPORTION = 0.8  # accounts/cyphers.py:95 (proportion > 0.8)
-
-
-def _edge(src, dst, rule: str, score, citation: str):
-    return (
-        F.struct(
-            src.alias("src"),
-            dst.alias("dst"),
-            F.lit(rule).alias("rule"),
-            score.alias("score"),
-            F.lit(citation).alias("citation"),
-        )
-    )
 
 
 def two_hop_links(
@@ -173,59 +161,3 @@ def anti_join_existing(candidates: DataFrame, existing: DataFrame) -> DataFrame:
     rev = existing.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return candidates.join(fwd.unionByName(rev).distinct(), ["src", "dst"], "left_anti")
 
-
-def minhash_blocking(
-    records: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hash_tables: int = 3,
-    jaccard_distance: float = 0.5,
-) -> DataFrame:
-    """Fuzzy-name candidate blocking via MinHash-LSH (pyspark.ml.feature).
-
-    The reference has no fuzzy matching — all its blocks are exact keys —
-    but at web scale exact keys miss near-duplicate names; this generalizes
-    the blocking stage (SURVEY.md §2.5 "scored alias join" row). Returns
-    candidate pairs (src, dst, jaccard_dist) with src < dst.
-    """
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH, RegexTokenizer
-
-    tok = RegexTokenizer(
-        inputCol=text_col, outputCol="_toks", pattern=r"[^a-z0-9]+", toLowercase=True
-    )
-    toks = tok.transform(records.select(F.col(id_col).alias("_id"), text_col))
-    toks = toks.where(F.size("_toks") > 0)
-    cv = CountVectorizer(inputCol="_toks", outputCol="_vec", binary=True).fit(toks)
-    # CountVectorizer caps its vocabulary at 2^18; past the cap a record
-    # whose tokens are ALL out-of-vocab gets an all-zero vector, which
-    # MinHashLSH rejects with IllegalArgumentException (the F.size guard
-    # above only catches EMPTY token lists). OOV is possible iff the cap
-    # was hit (default minDF keeps every observed token otherwise), so
-    # only then pre-filter to records with ≥1 in-vocab token — a
-    # broadcast semi-join on the exploded token relation (vocab is
-    # driver-sized by construction; never densify the vector).
-    if len(cv.vocabulary) >= (1 << 18):
-        spark = toks.sparkSession
-        vocab_df = F.broadcast(
-            spark.createDataFrame(((w,) for w in cv.vocabulary), "_w string")
-        )
-        keep = (
-            toks.select("_id", F.explode("_toks").alias("_w"))
-            .join(vocab_df, "_w")
-            .select("_id")
-            .dropDuplicates()
-        )
-        toks = toks.join(keep, "_id", "left_semi")
-    vecs = cv.transform(toks)
-    lsh = MinHashLSH(
-        inputCol="_vec", outputCol="_hashes", numHashTables=num_hash_tables, seed=42
-    ).fit(vecs)
-    pairs = lsh.approxSimilarityJoin(vecs, vecs, jaccard_distance, distCol="jaccard_dist")
-    return (
-        pairs.where(F.col("datasetA._id") < F.col("datasetB._id"))
-        .select(
-            F.col("datasetA._id").alias("src"),
-            F.col("datasetB._id").alias("dst"),
-            F.col("jaccard_dist"),
-        )
-    )

@@ -218,10 +218,6 @@ def _counted_explode(srt0: DataFrame, carry_cols: tuple[str, ...]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _nid(label: str, key_col) -> F.Column:
-    return node_id(label, key_col)
-
-
 def build_graph(
     spark: SparkSession,
     mentions: DataFrame,
@@ -258,9 +254,9 @@ def build_graph(
     def mk_edges(df: DataFrame, s_label: str, s_col: str, pred: str, o_label: str, o_col: str, weight=None):
         w = weight if weight is not None else F.lit(1.0)
         return df.select(
-            _nid(s_label, F.col(s_col)).alias("subj"),
+            node_id(s_label, F.col(s_col)).alias("subj"),
             F.lit(pred).alias("pred"),
-            _nid(o_label, F.col(o_col)).alias("obj"),
+            node_id(o_label, F.col(o_col)).alias("obj"),
             w.cast("double").alias("weight"),
             F.lit(None).cast("string").alias("citation"),
         )
@@ -288,11 +284,11 @@ def build_graph(
     e_mention = (
         men.where(_pred.isNotNull())
         .select(
-            F.when(is_author, _nid("Wallet", F.col("value")))
-            .otherwise(_nid("Page", F.col("url")))
+            F.when(is_author, node_id("Wallet", F.col("value")))
+            .otherwise(node_id("Page", F.col("url")))
             .alias("subj"),
             _pred.alias("pred"),
-            _nid(_obj_label, F.when(is_author, F.col("url")).otherwise(F.col("value")))
+            node_id(_obj_label, F.when(is_author, F.col("url")).otherwise(F.col("value")))
             .alias("obj"),
             F.when(F.col("kind") == "twitter", F.col("n").cast("double"))
             .otherwise(F.lit(1.0))
@@ -330,30 +326,30 @@ def build_graph(
     # --- identity links (operators/linking.py rules 1-4) ------------------
     alias_rel = (
         reg.select(
-            _nid("Wallet", F.col("wallet")).alias("node_id"),
+            node_id("Wallet", F.col("wallet")).alias("node_id"),
             F.lit("Wallet").alias("node_label"),
-            _nid("Ens", F.col("ens")).alias("alias_id"),
+            node_id("Ens", F.col("ens")).alias("alias_id"),
         )
         .unionByName(
             t_ens.select(
-                _nid("Twitter", F.col("handle")).alias("node_id"),
+                node_id("Twitter", F.col("handle")).alias("node_id"),
                 F.lit("Twitter").alias("node_label"),
-                _nid("Ens", F.col("ens")).alias("alias_id"),
+                node_id("Ens", F.col("ens")).alias("alias_id"),
             )
         )
     )
     l_two_hop = linking.two_hop_links(alias_rel)
 
     author_edges = author.select(
-        _nid("Wallet", F.col("value")).alias("wallet_id"), F.col("url").alias("page_url")
+        node_id("Wallet", F.col("value")).alias("wallet_id"), F.col("url").alias("page_url")
     )
     reference_edges = kind("twitter").select(
-        F.col("url").alias("page_url"), _nid("Twitter", F.col("value")).alias("twitter_id")
+        F.col("url").alias("page_url"), node_id("Twitter", F.col("value")).alias("twitter_id")
     )
     l_scored = linking.scored_reference_links(author_edges, reference_edges)
 
     entities = alias_dict.select(
-        _nid("Entity", F.col("entity_id")).alias("entity_node_id"), F.col("handle")
+        node_id("Entity", F.col("entity_id")).alias("entity_node_id"), F.col("handle")
     )
     # rule 4 joins against ALL Twitter nodes the graph mints
     # (accounts/cyphers.py:183-201 matches every :Twitter node), so the
@@ -369,7 +365,7 @@ def build_graph(
         .dropDuplicates()
     )
     twitter_nodes = twitter_dim.select(
-        _nid("Twitter", F.col("handle_key")).alias("twitter_node_id"), "handle_key"
+        node_id("Twitter", F.col("handle_key")).alias("twitter_node_id"), "handle_key"
     )
     l_dict = linking.dictionary_links(entities, twitter_nodes)
 
@@ -414,8 +410,8 @@ def build_graph(
         F.col("snapshot"),
     ).dropDuplicates()
     snap_ids = snaps.select(
-        _nid("Wallet", F.col("holder_key")).alias("holder"),
-        _nid("Token", F.col("token_key")).alias("token"),
+        node_id("Wallet", F.col("holder_key")).alias("holder"),
+        node_id("Token", F.col("token_key")).alias("token"),
         "snapshot",
     )
     s1 = snap_ids.where(F.col("snapshot") == 1).select(
@@ -463,7 +459,7 @@ def build_graph(
         # no per-branch dropDuplicates: the union below dedups by id once —
         # one shuffle total instead of one per branch
         return df.select(
-            _nid(label, F.col(key_col)).alias("id"),
+            node_id(label, F.col(key_col)).alias("id"),
             F.lit(label).alias("label"),
             F.lower(F.col(key_col)).alias("key"),
         )
@@ -488,7 +484,7 @@ def build_graph(
 
     def labeled(df: DataFrame) -> DataFrame:
         return df.select(
-            _nid(F.col("_l"), F.col("_k")).alias("id"),
+            node_id(F.col("_l"), F.col("_k")).alias("id"),
             F.col("_l").alias("label"),
             F.lower(F.col("_k")).alias("key"),
         )

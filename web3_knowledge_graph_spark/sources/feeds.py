@@ -20,6 +20,8 @@ the reference where every source resolves to the same :Wallet nodes.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 WALLET_MOD = 97  # must match sources/pages.py WALLET_MOD
 
 
@@ -712,50 +714,41 @@ def all_feeds(spark, sf_dir: str) -> tuple:
     re-plans (measured 12.4 s cold for the full feed-rule union at
     sf0.1/8 cores); materializing the three base tables once (~1.1 s)
     drops that to 4.5 s. The three materializations are independent jobs —
-    run them on parallel threads so the scheduler interleaves their stages
+    run them on a thread pool so the scheduler interleaves their stages
     (serial they cost ~3.3 s of the feed path's wall; interleaved ~1.3 s).
     persist (not localCheckpoint) so the caller can UNPERSIST the bases
     once its own downstream materialization holds the data — returns
-    (feeds dict, base-table handles) for exactly that cleanup.
+    (feeds dict, base-table handles) for exactly that cleanup. On failure
+    every base persisted so far is unpersisted before the re-raise.
     ``feed()`` (single-feed driver queries) keeps plain views — an eager
     3-table materialization would cost more than the one query it serves."""
-    import threading
+    bases: list = []
 
-    out: dict = {}
+    def _persist(t: str):
+        df = spark.read.parquet(f"{sf_dir}/{t}.parquet").persist()
+        bases.append(df)
+        df.count()
+        return df
 
-    def _ckpt(t: str) -> None:
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{t}.parquet").persist()
-            df.count()
-            out[t] = df
-        except BaseException as exc:  # re-raised on the caller's thread
-            out[f"{t}_exc"] = exc
-
-    threads = [
-        threading.Thread(target=_ckpt, args=(t,), name=f"feed-base-{t}")
-        for t in ("events", "orders", "customer")
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    for t in ("events", "orders", "customer"):
-        if f"{t}_exc" in out:
-            raise out[f"{t}_exc"]
-        out[t].createOrReplaceTempView(t)
-    # spark.sql() analyzes eagerly — 22 serial py4j round-trips through
-    # the analyzer measured ~3-4 s of the cold feed path. The analyses
-    # are independent (read-only against the three views registered
-    # above), so run them on a thread pool; dict insertion order is
-    # restored from ALL_FEEDS so downstream plan shape is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    names = list(ALL_FEEDS)
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        dfs = list(pool.map(lambda n: spark.sql(ALL_FEEDS[n]), names))
-    feeds = dict(zip(names, dfs))
-    bases = [out[t] for t in ("events", "orders", "customer")]
-    return feeds, bases
+    tables, names = ("events", "orders", "customer"), list(ALL_FEEDS)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            # list(): all three persist before any view is registered
+            for t, df in zip(tables, list(pool.map(_persist, tables))):
+                df.createOrReplaceTempView(t)
+            # spark.sql() analyzes eagerly — 22 serial py4j round-trips
+            # through the analyzer measured ~3-4 s of the cold feed path.
+            # The analyses are independent (read-only against the three
+            # views registered above), so they run on the pool too; dict
+            # insertion order is restored from ALL_FEEDS so downstream
+            # plan shape is unchanged.
+            dfs = list(pool.map(lambda n: spark.sql(ALL_FEEDS[n]), names))
+    except BaseException:
+        # leaving the pool joined every worker, so bases is complete
+        for df in bases:
+            df.unpersist()
+        raise
+    return dict(zip(names, dfs)), bases
 
 
 def feed_cte(*names: str) -> str:

@@ -80,12 +80,6 @@ FROM documents
 """
 
 
-def pages_oracle_cte(sf_dir: str | None = None) -> str:
-    """DuckDB-side CTE prologue: ``WITH pages AS (…)``. The driver
-    pre-registers ``documents`` as a view, so no path is needed."""
-    return f"WITH pages AS ({PAGES_SQL})"
-
-
 def synthesize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side pages: run PAGES_SQL over the sf_dir documents parquet and
     add the ``warc_ts``/``html`` columns of the canonical PAGES schema
